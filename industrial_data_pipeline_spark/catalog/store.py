@@ -12,12 +12,18 @@ Scale notes (the design target is ~100 TB of archive):
 - ``archive`` is hive-partitioned by ``ts_date = date(timestamp)``:
   time-range queries prune partitions at plan time; within files,
   parquet min/max row-group stats prune on ``attribute_id``.
-- Upserts (the reference's ON CONFLICT paths,
-  /root/reference/database/database.py:594 and :712) are implemented
-  as *partition-scoped merges*: only the date partitions present in
-  the incoming batch are read, deduped and rewritten via dynamic
-  partition overwrite. Steady-state 1-minute ingest therefore touches
-  one partition per day regardless of history size.
+- Upserts (the reference's ON CONFLICT paths, its database.py:594
+  and :712) first probe the date partitions present in the incoming
+  batch for its keys. A batch of new keys only — a live minute, a
+  fresh backfill — is appended as one new file per date, like the
+  reference's COPY, and writes only its own rows. A batch that
+  updates a stored key is a
+  *partition-scoped merge*: the affected partitions are read, deduped
+  and rewritten as one file each via dynamic partition overwrite. A
+  partition that would pass ``MAX_PARTITION_FILES`` files also takes
+  the merge, so a live day holds a bounded number of files and
+  1-minute ingest rewrites a day once per ``MAX_PARTITION_FILES``
+  appends, whatever the history size.
 - Deletes (catalog cascades, /root/reference/database/database.py:915-958)
   are anti-join rewrites. They are rare management-plane operations in
   the reference; we rewrite the full table for dims and all partitions
@@ -42,7 +48,13 @@ import shutil
 import threading
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import (
+    DataFrame,
+    Observation,
+    SparkSession,
+    functions as F,
+    types as T,
+)
 
 from industrial_data_pipeline_spark.catalog.schemas import (
     ARCHIVE_PARTITION_COL,
@@ -52,6 +64,30 @@ from industrial_data_pipeline_spark.catalog.schemas import (
 )
 
 _TABLES = ("element", "attribute", "archive")
+
+#: most parquet files an append may leave in one archive date
+#: partition; an upsert that would exceed it merges the partition back
+#: into one file instead (per-file read cost in SCALE_NOTES.md)
+MAX_PARTITION_FILES = 8
+
+#: largest upsert (rows) whose keys the stored-key probe broadcasts;
+#: 16 B of key per row keeps it far below the broadcast threshold
+PROBE_BROADCAST_ROWS = 100_000
+
+
+def _resolve(rows: DataFrame, pick) -> DataFrame:
+    """One row per (attribute_id, timestamp): ``pick`` (``F.min_by`` or
+    ``F.max_by``) over the ordering struct (_src, value). ``_src``
+    ranks stored rows (0) against incoming ones (1); value breaks the
+    tie between duplicate incoming keys, which would otherwise get a
+    partition-order-dependent winner. Grouping on the date as well is
+    free (it is a function of the timestamp) and lets a frame already
+    repartitioned by date aggregate without a second shuffle."""
+    return (rows.groupBy("attribute_id", "timestamp",
+                         ARCHIVE_PARTITION_COL)
+            .agg(pick("value", F.struct("_src", "value")).alias("value"))
+            .select("attribute_id", "timestamp", "value",
+                    ARCHIVE_PARTITION_COL))
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -314,20 +350,27 @@ class ParquetStore:
         return df.withColumn(ARCHIVE_PARTITION_COL, F.to_date("timestamp"))
 
     @staticmethod
-    def _clustered(df: DataFrame) -> DataFrame:
+    def _clustered(df: DataFrame, pick=None,
+                   one_date: bool = False) -> DataFrame:
         """Archive write layout: one shuffle clusters rows by date
-        (file count tracks date count — the small-files guard), then
-        an in-task sort by (attribute_id, timestamp) so every parquet
-        row group covers a narrow attribute range and min/max stats
-        prune attribute filters at scan time. This is the columnar
-        analog of the reference's only physical read-path tuning —
-        its archive(attribute_id) / archive(timestamp) B-tree indexes
-        (populate.py:113-118): partition pruning plays the timestamp
-        index, row-group clustering plays the attribute index.
-        Measured effect in SCALE_NOTES.md."""
-        return df.repartition(F.col(ARCHIVE_PARTITION_COL)) \
-            .sortWithinPartitions(ARCHIVE_PARTITION_COL,
-                                  "attribute_id", "timestamp")
+        (file count tracks date count — the small-files guard; a frame
+        known to hold ``one_date`` needs no shuffle, only one task),
+        then, given ``pick``, duplicate keys resolve inside each task
+        (:func:`_resolve`), then an in-task sort by (attribute_id,
+        timestamp) so every parquet row group covers a narrow
+        attribute range and min/max stats prune attribute filters at
+        scan time. This is the columnar analog of the reference's only
+        physical read-path tuning — its archive(attribute_id) /
+        archive(timestamp) B-tree indexes (populate.py:113-118):
+        partition pruning plays the timestamp index, row-group
+        clustering plays the attribute index. Measured effect in
+        SCALE_NOTES.md."""
+        out = (df.coalesce(1) if one_date
+               else df.repartition(F.col(ARCHIVE_PARTITION_COL)))
+        if pick is not None:
+            out = _resolve(out, pick)
+        return out.sortWithinPartitions(ARCHIVE_PARTITION_COL,
+                                        "attribute_id", "timestamp")
 
     @_locked
     def overwrite_dim(self, database: str, table: str, df: DataFrame) -> None:
@@ -466,74 +509,85 @@ class ParquetStore:
 
     @_locked
     def upsert_archive(self, database: str, df: DataFrame,
-                       mode: str = "first_wins") -> DataFrame | None:
-        """Partition-scoped merge on (attribute_id, timestamp).
+                       mode: str = "first_wins") -> None:
+        """Partition-scoped upsert on (attribute_id, timestamp).
 
         mode="first_wins"  — existing rows win (reference backfill
             ON CONFLICT DO NOTHING, database.py:594)
         mode="last_wins"   — incoming rows win (reference trigger
             ON CONFLICT DO UPDATE, database.py:710-713)
 
-        Only the date partitions present in ``df`` are read and
-        rewritten (dynamic partition overwrite), so cost scales with
-        the batch's date span, not with history size.
+        Duplicate keys within ``df`` resolve by value: the smallest
+        wins under first_wins, the largest under last_wins.
 
-        Returns the MATERIALIZED merged frame — by construction the
-        exact post-write content of the affected date partitions
-        (optimization r15): a caller that immediately needs those
-        partitions back (derived maintenance's sibling lookup) can
-        read the local blocks instead of re-listing and re-scanning
-        the files this call just wrote. Returns None when the batch
-        was empty (nothing written).
+        One semi-join probe of the affected date partitions decides
+        the path. When no incoming key is stored yet (a live minute,
+        a fresh backfill) the deduplicated rows are APPENDED as one
+        new file per date and the stored files are not touched.
+        Otherwise, or when the append would leave a partition above
+        :data:`MAX_PARTITION_FILES` files, the affected partitions
+        are merged and rewritten as one file each (dynamic partition
+        overwrite). Either way cost scales with the batch's date span,
+        not with history size.
         """
         assert mode in ("first_wins", "last_wins")
+        pick = F.min_by if mode == "first_wins" else F.max_by
         path = self._path(database, "archive")
-        # one evaluation of the caller's plan: the dates collect AND
-        # the merge both read it, and for derived maintenance that
-        # plan is a pivot+join worth not recomputing
-        incoming = self._with_partition(
-            df.select("attribute_id", "timestamp", "value")
-        ).localCheckpoint(eager=True)
-        # affected partitions: tiny driver-side list (dates in the batch)
-        dates = [r[0] for r in
-                 incoming.select(ARCHIVE_PARTITION_COL).distinct().collect()]
+        # one evaluation of the caller's plan, which the probe and the
+        # write both read; the same job observes the affected dates
+        seen = Observation()
+        incoming = (
+            self._with_partition(
+                df.select("attribute_id", "timestamp", "value"))
+            .withColumn("_src", F.lit(1))
+            .observe(seen,
+                     F.collect_set(ARCHIVE_PARTITION_COL).alias("dates"),
+                     F.count(F.lit(1)).alias("rows"))
+            .localCheckpoint(eager=True))
+        stats = seen.get
+        dates = sorted(stats["dates"])
         if not dates:
-            return None
+            return
         existing = (
             self.archive(database)
             .where(F.col(ARCHIVE_PARTITION_COL).isin(dates))
         )
-        # precedence via a source rank instead of a window sort over
-        # everything: groupBy + min_by/max_by is a single partial-aggable
-        # shuffle on the merge key.
+        keys = ["attribute_id", "timestamp"]
+        probe = incoming.select(*keys)
+        # insert_attribute's backfill passes the whole history here:
+        # broadcast only an input counted small
+        if stats["rows"] <= PROBE_BROADCAST_ROWS:
+            probe = F.broadcast(probe)
+        if (self._room_to_append(path, dates)
+                and existing.join(probe, keys, "left_semi").isEmpty()):
+            self._clustered(incoming, pick, one_date=len(dates) == 1) \
+                .write.mode("append").partitionBy(
+                    ARCHIVE_PARTITION_COL
+                ).parquet(path)
+            return
         old = existing.withColumn("_src", F.lit(0))
-        new = incoming.withColumn("_src", F.lit(1))
-        unioned = old.unionByName(new)
-        pick = F.min_by if mode == "first_wins" else F.max_by
-        # ordering struct: _src (old-vs-new precedence) THEN value —
-        # duplicate keys WITHIN one batch would otherwise tie on _src
-        # and pick a partition-order-dependent winner
-        merged = (
-            unioned.groupBy("attribute_id", "timestamp")
-            .agg(
-                pick(F.struct("value", ARCHIVE_PARTITION_COL),
-                     F.struct(F.col("_src"), F.col("value")))
-                .alias("_row"))
-            .select("attribute_id", "timestamp",
-                    F.col("_row.value").alias("value"),
-                    F.col(f"_row.{ARCHIVE_PARTITION_COL}")
-                    .alias(ARCHIVE_PARTITION_COL))
-        )
+        merged = _resolve(old.unionByName(incoming), pick)
         # materialize before the overwrite: the merged plan reads the
         # same partitions it is about to replace. Bounded by the
         # batch's affected partitions, not history size.
         merged = merged.localCheckpoint(eager=True)
         with self._dynamic_overwrite():
-            self._clustered(merged) \
+            self._clustered(merged, one_date=len(dates) == 1) \
                 .write.mode("overwrite").partitionBy(
                     ARCHIVE_PARTITION_COL
                 ).parquet(path)
-        return merged
+
+    @staticmethod
+    def _room_to_append(path: str, dates: list) -> bool:
+        """Whether one more file per affected date partition keeps
+        every partition within :data:`MAX_PARTITION_FILES`."""
+        for d in dates:
+            part = os.path.join(path, f"{ARCHIVE_PARTITION_COL}={d}")
+            if os.path.isdir(part) and sum(
+                    f.endswith(".parquet") for f in os.listdir(part)
+            ) >= MAX_PARTITION_FILES:
+                return False
+        return True
 
     @_locked
     def rewrite_archive(self, database: str, df: DataFrame) -> None:

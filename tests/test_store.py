@@ -2,6 +2,7 @@
 
 import os
 from datetime import datetime
+from pathlib import Path
 
 import pytest
 
@@ -130,6 +131,82 @@ def test_upsert_duality(spark, tmp_path):
     assert a[0][2] == 10.0  # incumbent survived
     assert b[0][2] == 99.0  # incoming replaced
     assert a[1][2] == b[1][2] == 2.0  # fresh key inserted either way
+
+
+def _day_files(tmp_path, day="2025-01-01"):
+    part = tmp_path / "warehouse" / "db1" / "archive" / f"ts_date={day}"
+    return sorted(str(f) for f in part.glob("*.parquet"))
+
+
+def _minute(m):
+    return datetime(2025, 1, 1, 0, m)
+
+
+@pytest.mark.parametrize("mode,winner", [("first_wins", 3.0),
+                                         ("last_wins", 5.0)])
+def test_upsert_in_batch_duplicates_on_both_paths(spark, tmp_path, mode,
+                                                  winner):
+    """Duplicate keys inside one batch keep the same winner whether
+    the upsert appends (only new keys) or merges (a stored key is
+    updated): the smallest value under first_wins, the largest under
+    last_wins. The partition already holds older minutes."""
+    store = _mk(spark, tmp_path)
+    store.append_archive("db1", _arch(spark, [(1, _minute(m), 1.0)
+                                              for m in range(3)]))
+    # append path: new minute, duplicate key
+    store.upsert_archive("db1", _arch(spark, [
+        (1, _minute(10), 3.0), (1, _minute(10), 5.0),
+        (2, _minute(10), 4.0)]), mode=mode)
+    assert len(_day_files(tmp_path)) == 2  # appended, not rewritten
+    # merge path: one stored key plus a duplicate new key
+    store.upsert_archive("db1", _arch(spark, [
+        (1, _minute(0), 9.0), (1, _minute(11), 5.0),
+        (1, _minute(11), 3.0)]), mode=mode)
+    assert len(_day_files(tmp_path)) == 1  # merged into one file
+    got = {(r.attribute_id, r.timestamp): r.value
+           for r in store.archive_values("db1").collect()}
+    assert got[(1, _minute(10))] == winner
+    assert got[(1, _minute(11))] == winner
+    assert got[(2, _minute(10))] == 4.0
+    assert got[(1, _minute(0))] == (1.0 if mode == "first_wins" else 9.0)
+    assert len(got) == 6
+
+
+def test_upsert_append_leaves_stored_file_untouched(spark, tmp_path):
+    """An upsert of new keys only adds a file; the stored file keeps
+    its bytes and its modification time."""
+    store = _mk(spark, tmp_path)
+    store.append_archive("db1", _arch(spark, [(1, _minute(0), 1.0)]))
+    (old,) = _day_files(tmp_path)
+
+    def stamp():
+        return os.stat(old).st_mtime_ns, Path(old).read_bytes()
+
+    before = stamp()
+    store.upsert_archive("db1", _arch(spark, [(1, _minute(1), 2.0)]),
+                         mode="last_wins")
+    files = _day_files(tmp_path)
+    assert len(files) == 2 and old in files
+    assert stamp() == before
+    assert _state(store) == [(1, _minute(0), 1.0), (1, _minute(1), 2.0)]
+
+
+def test_upsert_appends_stay_within_file_bound(spark, tmp_path):
+    """More consecutive new-minute upserts than MAX_PARTITION_FILES
+    never leave a partition above the bound: the append that would
+    pass it merges the partition into one file instead, with every
+    row kept."""
+    from industrial_data_pipeline_spark.catalog.store import (
+        MAX_PARTITION_FILES)
+    store = _mk(spark, tmp_path)
+    want = []
+    for m in range(MAX_PARTITION_FILES + 2):
+        rows = [(a, _minute(m), float(a * 100 + m)) for a in (1, 2)]
+        store.upsert_archive("db1", _arch(spark, rows), mode="last_wins")
+        want += rows
+        assert len(_day_files(tmp_path)) <= MAX_PARTITION_FILES
+    assert len(_day_files(tmp_path)) < MAX_PARTITION_FILES  # merged once
+    assert _state(store) == sorted(want)
 
 
 def _mk2(spark, p):

@@ -79,11 +79,8 @@ def test_streaming_end_to_end(spark, pipe, tmp_path):
 
 
 def test_two_derived_formulas_one_batch(spark, pipe):
-    """Regression: with TWO derived formulas over intersecting
-    sources, the first formula's upsert rewrites the affected
-    partitions; the second must read a FRESH archive frame — a frame
-    built before the loop scans the deleted file listing and dies
-    with FileNotFoundException."""
+    """TWO derived formulas over intersecting sources, both touched
+    by one batch, both land with the batch's values."""
     pipe.insert_attribute("plant", element_id=3, name="DiffTP",
                           formula="$1 - $2")
     m = DerivedMaintenance(spark, pipe.store, "plant")
@@ -95,6 +92,37 @@ def test_two_derived_formulas_one_batch(spark, pipe):
     # in insert order after the sources)
     derived = sorted(v for k, v in vals.items() if k not in (1, 2))
     assert derived == [6.0, 7.0]
+
+
+def test_formula_over_derived_ids_only_is_maintained(spark, pipe):
+    """A formula whose sources are all derived (``$4 * 2`` over AvgTP)
+    is touched by the AvgTP rows the same batch produces, and sees
+    their new values."""
+    did = pipe.insert_attribute("plant", element_id=3, name="TwiceAvg",
+                                formula="$4 * 2")
+    m = DerivedMaintenance(spark, pipe.store, "plant")
+    t0 = T(2025, 1, 1, 0, 0)
+    m.process_batch(_batch(spark, [(1, t0, 10.0), (2, t0, 20.0)]))
+    m.process_batch(_batch(spark, [(1, t0, 30.0)]))
+    vals = {r.attribute_id: r.value for r in
+            pipe.store.archive_values("plant").collect()}
+    assert vals[4] == 25.0
+    assert vals[did] == 50.0
+
+
+def test_batch_reading_of_derived_id_yields_to_computed_value(spark,
+                                                              pipe):
+    """A batch that carries a reading for a derived attribute's own id
+    ends with the computed value where the formula applies; where it
+    does not, the reading is kept."""
+    m = DerivedMaintenance(spark, pipe.store, "plant")
+    t0, t1 = T(2025, 1, 1, 0, 0), T(2025, 1, 1, 0, 1)
+    m.process_batch(_batch(spark, [(1, t0, 10.0), (2, t0, 20.0),
+                                   (4, t0, 999.0), (4, t1, 7.0)]))
+    got = {r.timestamp: r.value for r in
+           pipe.store.archive_values("plant")
+           .where("attribute_id = 4").collect()}
+    assert got == {t0: 15.0, t1: 7.0}
 
 
 def test_session_merge_never_regresses_open_end():
