@@ -18,13 +18,22 @@ Deliberate fixes over the reference, documented per SURVEY.md §2.12:
 
 from __future__ import annotations
 
+import json
+from collections import defaultdict
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from industrial_data_pipeline_spark.catalog.schemas import (
+    ATTRIBUTE_SCHEMA,
+    ELEMENT_SCHEMA,
+)
 from industrial_data_pipeline_spark.catalog.store import ParquetStore
 from industrial_data_pipeline_spark.functions.formula import validate
-from industrial_data_pipeline_spark.operators.closure import hierarchy_paths
+from industrial_data_pipeline_spark.operators.closure import (
+    attribute_path_rows,
+    element_paths,
+)
 from industrial_data_pipeline_spark.operators.derived import backfill_derived
 from industrial_data_pipeline_spark.operators.export import (
     export_csv,
@@ -37,14 +46,11 @@ from industrial_data_pipeline_spark.operators.lookup import (
     leaf_elements_true,
     lookup_dispatch,
 )
-from industrial_data_pipeline_spark.operators.maintenance import (
-    purge_orphans,
-)
 from industrial_data_pipeline_spark.sources.mapping import (
-    build_mapping,
+    mapping_from_rows,
     write_mapping,
 )
-from industrial_data_pipeline_spark.sources.tree import load_tree_cache
+from industrial_data_pipeline_spark.sources.tree import flatten_tree
 
 
 class Pipeline:
@@ -196,10 +202,14 @@ class Pipeline:
         formula against existing ids and backfill history (first-wins).
         Real-time maintenance = streaming/derived.py (T5)."""
         attr = self.store.attribute(database)
-        if formula is not None:
+        if formula is None:
+            new_id = self._next_id(attr, "attribute_id")
+        else:
+            # one collect feeds both the formula check and the next id
             known = {r[0] for r in attr.select("attribute_id").collect()}
             validate(formula, known)
-        new_id = self._next_id(attr, "attribute_id")
+            new_id = max((i for i in known if i is not None),
+                         default=0) + 1
         row = self.spark.createDataFrame(
             [(element_id, new_id, name, kks, formula)], attr.schema)
         self.store.overwrite_dim(database, "attribute",
@@ -330,136 +340,109 @@ class Pipeline:
         remapping archive ids old→new.
 
         The reference does this with four recursive CTEs and a
-        Python remap loop; here old/new catalogs join on path and the
-        archive gets one broadcast-join rewrite.
+        Python remap loop. The catalog is thousands of rows, so the
+        paths, the id map and the derived restore are computed on the
+        driver from the parsed tree and one collect of each old dim
+        (operators/closure.element_paths); the archive gets one
+        broadcast-join rewrite.
         """
+        with open(json_path, encoding="utf-8") as f:
+            new_elems, new_attrs = flatten_tree(json.load(f))
         self.store.create_database(database)
-        old_elem = self.store.element(database)
-        old_attr = self.store.attribute(database)
-        new_elem, new_attr = load_tree_cache(self.spark, json_path)
+        old_elems = self.store.element(database).collect()
+        old_attrs = self.store.attribute(database).collect()
 
-        # ONE hierarchy closure per catalog generation, materialized
-        # (dimension-sized): old paths feed both the derived snapshot
-        # and the id remap; new paths feed the remap AND the derived
-        # restore — recomputing the iterative closure for each use
-        # tripled this method's job count. The two closures read
-        # independent inputs (stored old dims vs the parsed tree
-        # cache) — overlapped (optimization r15, guide §2.6)
-        from industrial_data_pipeline_spark.operators.lsh_index import (
-            run_writes_concurrently)
-
-        old_elem_paths, elem_paths = run_writes_concurrently(
-            lambda: hierarchy_paths(old_elem).select(
-                "element_id", "path").localCheckpoint(eager=True),
-            lambda: hierarchy_paths(new_elem).select(
-                "element_id", "path").localCheckpoint(eager=True))
-        old_paths = self._attr_paths_from(old_elem_paths, old_attr)
-        new_paths = self._attr_paths_from(elem_paths, new_attr)
-        # collapse duplicate paths to ONE id (lowest — the reference
+        new_elem_paths = element_paths(new_elems)
+        # duplicate paths collapse to ONE id (lowest — the reference
         # builds {path: id} dicts, which likewise collapse): without
-        # this, two same-named attributes on one element make the
-        # path join many-to-many and every reload DUPLICATES their
-        # archive history
-        new_paths_1 = (new_paths.groupBy("attribute_path")
-                       .agg(F.min("attribute_id").alias("attribute_id")))
+        # this, two same-named attributes on one element would
+        # DUPLICATE their archive history on every reload
+        new_ids: dict = {}
+        for a, path in attribute_path_rows(new_elem_paths, new_attrs):
+            if path is not None:
+                new_ids[path] = min(new_ids.get(path, a[1]), a[1])
 
-        # snapshot derived attrs by full path (backup, populate.py:163-296)
-        derived = (old_attr.where(F.col("formula").isNotNull())
-                   .join(old_paths, "attribute_id")
-                   .select(F.col("attribute_id").alias("old_id"),
-                           "name", "kks", "formula", "attribute_path"))
+        # paths of old attributes, by id (a duplicated id holds every
+        # path recorded under it)
+        old_paths_by_id: dict = defaultdict(list)
+        for a, path in attribute_path_rows(element_paths(old_elems),
+                                           old_attrs):
+            if a["attribute_id"] is not None:
+                old_paths_by_id[a["attribute_id"]].append(path)
 
-        # id remap for source attrs: old_id → new_id on equal path
-        old_non_derived = (old_attr.where(F.col("formula").isNull())
-                           .join(old_paths, "attribute_id")
-                           .select(F.col("attribute_id").alias("old_id"),
-                                   "attribute_path"))
-        idmap = (old_non_derived
-                 .groupBy("attribute_path")
-                 .agg(F.min("old_id").alias("old_id"))
-                 .join(new_paths_1, "attribute_path")
-                 .select("old_id", F.col("attribute_id").alias("new_id")))
+        # id remap for source attrs: old_id → new_id on equal path,
+        # lowest old id per path
+        old_ids: dict = {}
+        for a in old_attrs:
+            if a["formula"] is not None:
+                continue
+            old_id = a["attribute_id"]
+            for path in old_paths_by_id.get(old_id, ()):
+                if path is not None:
+                    old_ids[path] = min(old_ids.get(path, old_id), old_id)
+        idmap = [(old_id, new_ids[path]) for path, old_id in old_ids.items()
+                 if path in new_ids]
 
-        # restore deriveds under matching parent-element paths
-        derived_rows = derived.withColumn(
-            "_parent_path",
-            F.expr("substring(attribute_path, 1, length(attribute_path) "
-                   "- length(name) - 1)")) \
-            .join(elem_paths,
-                  F.col("_parent_path") == F.col("path")) \
-            .select("element_id", "name", "kks", "formula", "old_id")
-        base = self._next_id(new_attr, "attribute_id")
-        # id assignment is driver-side: the derived snapshot is
-        # dimension-sized (catalog attributes) by construction, so a
-        # collect + enumerate replaces the global row_number window
-        # the earlier version used — one bounded job, no WindowExec,
-        # and every downstream consumer (final_attr, the id-map
-        # union, each per-partition archive rewrite) reads a local
-        # frame instead of re-executing the plan
-        drows = sorted(derived_rows.collect(),
-                       key=lambda r: r["old_id"])
-        restored = self.spark.createDataFrame(
-            [(r["element_id"], r["name"], r["kks"], r["formula"],
-              r["old_id"], int(base + i))
-             for i, r in enumerate(drows)],
-            "element_id long, name string, kks string, "
-            "formula string, old_id long, attribute_id long")
-        final_attr = new_attr.unionByName(
-            restored.select("element_id", "attribute_id", "name", "kks",
-                            "formula"))
-        derived_idmap = restored.select(
-            "old_id", F.col("attribute_id").alias("new_id"))
-        full_idmap = idmap.unionByName(derived_idmap)
+        # snapshot derived attrs by full path (backup,
+        # populate.py:163-296) and restore each under every new
+        # element whose path is the derived attribute's parent path;
+        # restored ids run from max(new id) + 1 in old-id order
+        elements_by_path: dict = defaultdict(list)
+        for e in new_elem_paths:
+            elements_by_path[e[4]].append(e[1])
+        restores = []
+        for a in old_attrs:
+            if a["formula"] is None or a["name"] is None:
+                continue
+            for path in old_paths_by_id.get(a["attribute_id"], ()):
+                if path is None:
+                    continue
+                parent = path[:max(len(path) - len(a["name"]) - 1, 0)]
+                restores += [(a, element_id)
+                             for element_id in elements_by_path.get(parent, ())]
+        restores.sort(key=lambda r: r[0]["attribute_id"])
+        base = max((a[1] for a in new_attrs), default=0) + 1
+        restored = [(element_id, base + i, a["name"], a["kks"], a["formula"])
+                    for i, (a, element_id) in enumerate(restores)]
+        final_attrs = list(new_attrs) + restored
+        idmap += [(a["attribute_id"], r[1])
+                  for (a, _), r in zip(restores, restored)]
 
-        # remap archive attribute ids (populate.py:530-597) and purge
-        # rows whose attribute no longer exists (J6, populate.py:409-417)
-        arch = self.store.archive_values(database)
-        # INNER remap: an archive row whose old attribute has no path
-        # match in the new tree is DROPPED — the earlier left-join +
-        # coalesce kept its raw id, and when the new tree's dense
-        # preorder reused that id the orphan history silently merged
-        # into an unrelated attribute (and could collide on
-        # (attribute_id, timestamp) with the rightful rows)
-        remapped = (arch.join(
-            F.broadcast(full_idmap),
-            arch.attribute_id == F.col("old_id"), "inner")
-            .select(F.col("new_id").alias("attribute_id"),
-                    "timestamp", "value"))
-        cleaned = purge_orphans(
-            remapped, final_attr.select("attribute_id"))
-
-        # final_attr still reads the OLD dims; materialize it (it is
-        # dimension-sized) before any directory swap, and rewrite the
-        # archive (which also reads the old dims) before the dims.
-        # (The two dim overwrites stay sequential: they serialize on
-        # the store's per-database writer lock by design.)
-        final_attr = final_attr.localCheckpoint(eager=True)
-        self.store.rewrite_archive(database, cleaned)
-        self.store.overwrite_dim(database, "element", new_elem)
-        self.store.overwrite_dim(database, "attribute", final_attr)
-        return {"element_count": new_elem.count(),
-                "attribute_count": final_attr.count()}
-
-    @staticmethod
-    def _attr_paths_from(elem_paths: DataFrame, attribute: DataFrame):
-        """Attribute paths from PRE-COMPUTED element paths (same
-        format as operators.closure.attribute_paths: path|name)."""
-        return (attribute.join(F.broadcast(elem_paths), "element_id")
-                .select("attribute_id",
-                        F.concat(F.col("path"), F.lit("|"),
-                                 F.col("name")).alias("attribute_path")))
+        # remap archive attribute ids (populate.py:530-597). The INNER
+        # join is also the orphan purge (J6, populate.py:409-417): every
+        # map target is an id of the new catalog, and an archive row
+        # whose old attribute has no path match in the new tree is
+        # DROPPED — keeping its raw id would merge its history into
+        # whichever new attribute reuses that id. A fresh database
+        # has no archive file to remap.
+        if self.store.has_archive_files(database):
+            arch = self.store.archive_values(database)
+            full_idmap = self.spark.createDataFrame(
+                idmap, "old_id long, new_id long")
+            self.store.rewrite_archive(database, arch.join(
+                F.broadcast(full_idmap),
+                arch.attribute_id == F.col("old_id"), "inner")
+                .select(F.col("new_id").alias("attribute_id"),
+                        "timestamp", "value"))
+        self.store.overwrite_dim(database, "element", self.spark
+                                 .createDataFrame(new_elems, ELEMENT_SCHEMA))
+        self.store.overwrite_dim(database, "attribute", self.spark
+                                 .createDataFrame(final_attrs,
+                                                  ATTRIBUTE_SCHEMA))
+        return {"element_count": len(new_elems),
+                "attribute_count": len(final_attrs)}
 
     def update_mapping_cache(self, database: str, db_map_path: str,
                              pi_map_path: str | None = None,
                              server: str | None = None) -> dict:
         """POST /api/update-cache (web_app.py:316) / D9. Returns both
         counts (fixes reference bug §2.12.3)."""
-        elem = self.store.element(database)
-        attr = self.store.attribute(database)
-        mapping = build_mapping(elem, attr)
+        elems = self.store.element(database).collect()
+        attrs = self.store.attribute(database).collect()
+        mapping = mapping_from_rows(elems, attrs)
         write_mapping(mapping, db_map_path)
         if pi_map_path is not None and server is not None:
-            write_mapping(build_mapping(elem, attr, server=server),
+            write_mapping(mapping_from_rows(elems, attrs, server=server),
                           pi_map_path)
-        return {"element_count": elem.count(),
+        return {"element_count": len(elems),
                 "attribute_count": len(mapping)}

@@ -31,7 +31,10 @@ Scale notes (the design target is ~100 TB of archive):
   signatures when those jars are available — import-gated, not assumed).
 - Dims are small (thousands of rows); every fact⋈dim join should
   broadcast them — readers get them via :meth:`element` /
-  :meth:`attribute` and join with ``F.broadcast``.
+  :meth:`attribute` and join with ``F.broadcast``. Dims are written
+  on the driver: :meth:`overwrite_dim` collects its frame and writes
+  one parquet file with pyarrow, as :meth:`create_database` does for
+  an empty dim, instead of running a Spark write job.
 
 Single-writer assumption matches the reference (one Flask app, one
 ingest daemon per database).
@@ -88,6 +91,24 @@ def _resolve(rows: DataFrame, pick) -> DataFrame:
             .agg(pick("value", F.struct("_src", "value")).alias("value"))
             .select("attribute_id", "timestamp", "value",
                     ARCHIVE_PARTITION_COL))
+
+
+def _write_dim_file(path: str, schema: T.StructType, rows: list) -> None:
+    """Write ``rows`` as the single parquet file of dim directory
+    ``path``, with the Arrow types Spark's own writer would use
+    (``to_arrow_schema``). Every field is nullable, as Spark writes
+    them: a frame read back from parquet may carry NULL ids."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    os.makedirs(path, exist_ok=True)
+    fields = [f.with_nullable(True) for f in to_arrow_schema(schema)]
+    table = pa.table(
+        [pa.array([r[i] for r in rows], type=f.type)
+         for i, f in enumerate(fields)],
+        schema=pa.schema(fields))
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -280,41 +301,23 @@ class ParquetStore:
         three tables; existing archive data is preserved.
 
         DDL is driver-side (optimization r14): an empty table is one
-        0-row parquet file, written directly via pyarrow with the
-        exact Arrow schema Spark's own writer would use
-        (``to_arrow_schema``) — three Spark write JOBS (measured
-        2–4 s of pure fixed cost at the head of every store-backed
-        query) become three ~ms file writes. Readers are unaffected:
-        every read path passes an explicit schema, and an empty file
-        has no row groups to reconcile."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        def _write_empty(path: str, schema) -> None:
-            os.makedirs(path, exist_ok=True)
-            table = pa.table(
-                {f.name: pa.array([], type=f.type)
-                 for f in to_arrow_schema(schema)})
-            pq.write_table(table,
-                           os.path.join(path, "part-00000.parquet"))
-
+        0-row parquet file (:func:`_write_dim_file`) — three Spark
+        write JOBS (measured 2–4 s of pure fixed cost at the head of
+        every store-backed query) become three ~ms file writes.
+        Readers are unaffected: every read path passes an explicit
+        schema, and an empty file has no row groups to reconcile."""
         for table, schema in (
             ("element", ELEMENT_SCHEMA),
             ("attribute", ATTRIBUTE_SCHEMA),
         ):
             path = self._path(database, table)
             if not os.path.exists(path):
-                _write_empty(path, schema)
+                _write_dim_file(path, schema, [])
         arch = self._path(database, "archive")
         if not os.path.exists(arch):
             # the archive root starts with no partition dirs at all —
             # exactly the state a partitionBy write of 0 rows leaves
             os.makedirs(arch, exist_ok=True)
-
-    @_locked
-    def drop_database(self, database: str) -> None:
-        shutil.rmtree(os.path.join(self.root, database), ignore_errors=True)
 
     # -------------------------------------------------------------- reads
     def _path(self, database: str, table: str) -> str:
@@ -339,6 +342,13 @@ class ParquetStore:
             + [T.StructField(ARCHIVE_PARTITION_COL, T.DateType(), True)])
         return self.spark.read.schema(schema).parquet(
             self._path(database, "archive"))
+
+    def has_archive_files(self, database: str) -> bool:
+        """Whether any parquet file lies under the archive directory
+        (a fresh database has none)."""
+        return any(f.endswith(".parquet")
+                   for _, _, files in os.walk(self._path(database, "archive"))
+                   for f in files)
 
     def archive_values(self, database: str) -> DataFrame:
         """Archive projected to its logical schema (no partition col)."""
@@ -377,15 +387,11 @@ class ParquetStore:
         assert table in ("element", "attribute")
         path = self._path(database, table)
         tmp = path + ".tmp"
-        # materialize before the single-task write (optimization r14):
-        # dim frames are tiny but their PLANS are not — load_tree's
-        # preorder-id window, backup joins — and coalesce(1) would
-        # evaluate that whole plan serially inside the one write task
-        # (measured 6.5 s per overwrite_dim in q123; 0.3 s
-        # materialized). Dims are bounded (catalog-sized), so the
-        # eager checkpoint is cheap and runs parallel.
-        df = df.localCheckpoint(eager=True)
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        # dims are catalog-sized: one collect brings the rows to the
+        # driver before the swap (the frame may read the directory
+        # being replaced), and pyarrow writes them without a Spark job
+        shutil.rmtree(tmp, ignore_errors=True)
+        _write_dim_file(tmp, df.schema, df.collect())
         # atomic-ish swap: dims are tiny; single-writer assumption
         if os.path.exists(path):
             shutil.rmtree(path)

@@ -4,15 +4,25 @@ Reference: four near-identical ``WITH RECURSIVE element_paths`` CTEs
 (/root/reference/src/database/populate.py:200-231 et al.) plus a
 Python parent-pointer walk (/root/reference/database/database.py:811-839).
 
-Spark shape: iterate level-by-level joins, accumulating a path string.
-The loop runs depth(tree) times — plant hierarchies are ≤ ~6 deep — and
-each iteration joins the (tiny, broadcast) resolved frontier to the
-element dim, so there is no O(n²) blowup and no driver-side recursion
-over rows. Lineage is truncated with localCheckpoint so the plan does
-not grow with depth.
+Spark shape (:func:`hierarchy_paths`): iterate level-by-level joins,
+accumulating a path string. The loop runs depth(tree) times — plant
+hierarchies are ≤ ~6 deep — and each iteration joins the (tiny,
+broadcast) resolved frontier to the element dim, so there is no O(n²)
+blowup and no driver-side recursion over rows. Lineage is truncated
+with localCheckpoint so the plan does not grow with depth. It serves
+element frames of unbounded size (q07/q08 run it over ``customer``).
+
+Catalog twin (:func:`element_paths`): the same walk over rows already
+on the driver. A plant catalog is thousands of rows, and the iterative
+loop pays a checkpoint job plus an emptiness job per level for them;
+tree reload (``Pipeline.load_tree``) and the mapping sidecar
+(``build_mapping``) walk the collected rows instead, in no Spark job.
+Both variants keep one output contract, pinned by a parity test.
 """
 
 from __future__ import annotations
+
+from collections import defaultdict
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -54,6 +64,56 @@ def hierarchy_paths(element: DataFrame, sep: str = "|",
         resolved = resolved.unionByName(children)
         frontier = children
     return resolved
+
+
+def element_paths(rows, sep: str = "|", max_depth: int = 64) -> list[tuple]:
+    """Row twin of :func:`hierarchy_paths` for catalog-sized inputs.
+
+    ``rows``: (level, element_id, name, parent_id) sequences, e.g. the
+    collected element dim. Returns (level, element_id, name,
+    parent_id, path) tuples, breadth-first from the roots. Same
+    contract as the DataFrame walk: dangling and cyclic elements are
+    omitted; a duplicated element id yields one row per join match;
+    NULL names are skipped as ``concat_ws`` skips them (a root's path
+    is its name, NULL included); children stop after ``max_depth``
+    levels below the roots.
+    """
+    children: dict = defaultdict(list)
+    resolved = []
+    for r in rows:
+        level, element_id, name, parent_id = r[:4]
+        if parent_id is None:
+            resolved.append((level, element_id, name, None, name))
+        else:
+            children[parent_id].append((level, element_id, name, parent_id))
+    frontier = resolved
+    for _ in range(max_depth):
+        frontier = [
+            (*child, sep.join(p for p in (path, child[2]) if p is not None))
+            for _, element_id, _, _, path in frontier
+            for child in children.get(element_id, ())]
+        if not frontier:
+            break
+        resolved.extend(frontier)
+    return resolved
+
+
+def attribute_path_rows(paths: list[tuple], attributes,
+                        attr_sep: str = "|", prefix: str = "") -> list[tuple]:
+    """Row twin of :func:`attribute_paths` over :func:`element_paths`
+    output: (attribute row, attribute_path) per element match.
+    ``attributes`` are sequences led by (element_id, attribute_id,
+    name), the attribute dim's column order. The path is NULL when the
+    element path or the attribute name is NULL, as ``concat`` gives."""
+    by_element: dict = defaultdict(list)
+    for _, element_id, _, _, path in paths:
+        if element_id is not None:
+            by_element[element_id].append(path)
+    return [
+        (a, None if path is None or a[2] is None
+         else f"{prefix}{path}{attr_sep}{a[2]}")
+        for a in attributes
+        for path in by_element.get(a[0], ())]
 
 
 def attribute_paths(element: DataFrame, attribute: DataFrame,

@@ -82,24 +82,6 @@ def minhash_coeffs(p: int) -> tuple[int, int]:
     return a, b
 
 
-def minhash_signature(shingle_col: Column, num_perm: int = 32) -> Column:
-    """MinHash signature as a pure column expression. One base hash per
-    shingle (h31 = hash64 & 0x7FFFFFFF), then ``num_perm`` affine
-    permutations (a_p·h + b_p) mod P — 32-bit operands so the product
-    fits int64 exactly (portable to any engine's integer math).
-    NOTE: higher-order-function lambdas are interpreted (no whole-stage
-    codegen) — prefer :func:`minhash_signatures` on anything big."""
-    h32 = F.transform(shingle_col,
-                      lambda s: hash64(s).bitwiseAND(F.lit(2147483647)))
-    sigs = []
-    for p in range(num_perm):
-        a, b = minhash_coeffs(p)
-        sigs.append(F.array_min(F.transform(
-            h32, lambda h, a=a, b=b:
-            (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME))))
-    return F.array(*sigs)
-
-
 def minhash_signatures(base: DataFrame, id_col: str = "_id",
                        shingle_col: str = "_sh",
                        num_perm: int = 32) -> DataFrame:

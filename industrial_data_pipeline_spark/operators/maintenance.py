@@ -36,20 +36,6 @@ def cascade_delete_element(element: DataFrame, attribute: DataFrame,
     return kept_element, kept_attribute, kept_archive, counts
 
 
-def cascade_delete_attribute(attribute: DataFrame, archive: DataFrame,
-                             attribute_id: int):
-    """Attribute cascade (D8; database.py:1075-1111)."""
-    kept_archive = archive.where(F.col("attribute_id") != attribute_id)
-    kept_attribute = attribute.where(F.col("attribute_id") != attribute_id)
-    n_arch = archive.where(F.col("attribute_id") == attribute_id).count()
-    spark = attribute.sparkSession
-    counts = spark.createDataFrame(
-        [(1 if attribute.where(F.col("attribute_id") == attribute_id).count()
-          else 0, n_arch)],
-        "attributes_deleted long, archive_records_deleted long")
-    return kept_attribute, kept_archive, counts
-
-
 def purge_orphans(archive: DataFrame, attribute: DataFrame) -> DataFrame:
     """Orphan purge (J6; populate.py:409-417): keep archive rows whose
     attribute still exists — left_semi against the broadcast dim."""

@@ -26,6 +26,29 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+#: share of the machine's RAM the driver heap gets when
+#: ``SPARK_GRAFT_DRIVER_MEM`` is unset; the JVM's off-heap memory and
+#: the Python workers live in the rest
+HEAP_RAM_SHARE = 0.4
+MAX_DEFAULT_HEAP_MB = 48 * 1024
+
+
+def default_driver_mem(ram_bytes: int) -> str:
+    """Driver heap for a machine with ``ram_bytes`` of RAM:
+    :data:`HEAP_RAM_SHARE` of it, at least 1 GiB and at most 48 GiB."""
+    mb = int(ram_bytes * HEAP_RAM_SHARE) // (1024 * 1024)
+    return f"{min(MAX_DEFAULT_HEAP_MB, max(1024, mb))}m"
+
+
+def driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` when set, else sized from RAM. Read
+    per call, not at import: callers set the variable after importing
+    the package and before building the session."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    return mem if mem is not None else default_driver_mem(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
+
+
 def _xms_mb(mem: str) -> int | None:
     """Initial-heap megabytes: min(8 GiB, the configured max heap).
     Returns None when ``mem`` doesn't parse as a JVM size — then no
@@ -53,10 +76,8 @@ def get_spark(app_name: str = "industrial_data_pipeline_spark",
     session is returned as-is (Spark is one-session-per-JVM).
     """
     n = cores or default_parallelism()
-    # read per call, not at import: callers set the env var after
-    # importing the package and before building the session
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-    xms = _xms_mb(driver_mem)
+    mem = driver_mem()
+    xms = _xms_mb(mem)
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
@@ -67,7 +88,7 @@ def get_spark(app_name: str = "industrial_data_pipeline_spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_mem)
+        .config("spark.driver.memory", mem)
         # pre-size the heap: hash-heavy stages allocate hard, and a
         # growing heap means young-GC thrash on their first run —
         # capped at the configured max (a fixed -Xms8g refused to

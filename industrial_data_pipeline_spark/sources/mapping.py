@@ -7,7 +7,8 @@ The join key between PI API response paths and catalog attribute ids
 
 The mapping is dimension-sized (one entry per attribute) — it loads as
 a dict, ships to executors as a broadcast join table (J7), and is
-regenerated from the catalog via the hierarchy closure (D9).
+regenerated from the catalog via the hierarchy closure (D9), walked on
+the driver over the collected dims (operators/closure.element_paths).
 """
 
 from __future__ import annotations
@@ -16,21 +17,34 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from industrial_data_pipeline_spark.operators.closure import attribute_paths
+from industrial_data_pipeline_spark.operators.closure import (
+    attribute_path_rows,
+    element_paths,
+)
 
 
 def build_mapping(element: DataFrame, attribute: DataFrame,
                   server: str | None = None) -> dict[str, int]:
     """D9: regenerate {path_key: attribute_id}. With ``server``, keys
     use the PI form ``\\\\SERVER\\Root\\Child|Attr``; otherwise the DB
-    form ``Root|Child|Leaf|Attr``."""
+    form ``Root|Child|Leaf|Attr``. One collect per dim (both are
+    catalog-sized), then :func:`mapping_from_rows`."""
+    return mapping_from_rows(
+        element.select("level", "element_id", "name", "parent_id").collect(),
+        attribute.select("element_id", "attribute_id", "name").collect(),
+        server)
+
+
+def mapping_from_rows(elements, attributes,
+                      server: str | None = None) -> dict[str, int]:
+    """:func:`build_mapping` over rows already on the driver."""
     if server is None:
-        df = attribute_paths(element, attribute)
+        pairs = attribute_path_rows(element_paths(elements), attributes)
     else:
-        df = attribute_paths(element, attribute, sep="\\",
-                             attr_sep="|", prefix=f"\\\\{server}\\")
-    rows = df.collect()  # dimension-sized: one row per attribute
-    return {r["attribute_path"]: r["attribute_id"] for r in rows}
+        pairs = attribute_path_rows(element_paths(elements, sep="\\"),
+                                    attributes, attr_sep="|",
+                                    prefix=f"\\\\{server}\\")
+    return {path: a[1] for a, path in pairs}
 
 
 def write_mapping(mapping: dict[str, int], path: str) -> None:

@@ -17,15 +17,7 @@ insertion-ordered, forcing its whole id-remapping dance, SURVEY.md
 
 from __future__ import annotations
 
-import json
 from typing import Any
-
-from pyspark.sql import DataFrame, SparkSession
-
-from industrial_data_pipeline_spark.catalog.schemas import (
-    ATTRIBUTE_SCHEMA,
-    ELEMENT_SCHEMA,
-)
 
 
 def _roots(doc: Any) -> list[dict]:
@@ -57,18 +49,6 @@ def flatten_tree(doc: Any) -> tuple[list[tuple], list[tuple]]:
         for child in reversed(node.get("children") or []):
             stack.append((child, level + 1, eid))
     return elements, attributes
-
-
-def load_tree_cache(spark: SparkSession,
-                    json_path: str) -> tuple[DataFrame, DataFrame]:
-    """S4/D2: tree-cache file → (element_df, attribute_df)."""
-    with open(json_path, encoding="utf-8") as f:
-        doc = json.load(f)
-    elements, attributes = flatten_tree(doc)
-    return (
-        spark.createDataFrame(elements, ELEMENT_SCHEMA),
-        spark.createDataFrame(attributes, ATTRIBUTE_SCHEMA),
-    )
 
 
 def extract_leaf_webids(doc: Any, sep: str = "|") -> dict[str, str]:

@@ -12,7 +12,8 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("idp-tests", cores=8)
+    # cores: $SPARK_GRAFT_CPUS, else the machine's (session.py)
+    s = get_spark("idp-tests")
     yield s
 
 

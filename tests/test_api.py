@@ -1,14 +1,18 @@
 """Pipeline facade end-to-end: the reference's web-API semantics
 (SURVEY.md §2.10-§2.11) over the Parquet store."""
 
+import copy
 import json
-from datetime import datetime
+import uuid
+from datetime import datetime, timedelta
 
 import pytest
 
 from industrial_data_pipeline_spark.api import Pipeline
+from industrial_data_pipeline_spark.catalog.schemas import ELEMENT_SCHEMA
+from industrial_data_pipeline_spark.sources.mapping import build_mapping
 
-from tests.fixtures import T0, archive_rows, write_tree
+from tests.fixtures import T0, TREE, archive_rows, write_tree
 
 
 @pytest.fixture()
@@ -138,6 +142,53 @@ def test_reload_preserves_derived_and_remaps(pipe, tmp_path, spark):
     arch = pipe.store.archive_values("plant")
     assert arch.where(
         f"attribute_id = {restored[0].attribute_id}").count() == n_derived
+    n_fan_b = arch.where("attribute_id = 3").count()
+
+    def reload(tree):
+        path = str(tmp_path / "reload.json")
+        with open(path, "w", encoding="utf-8") as f:
+            json.dump(tree, f, ensure_ascii=False)
+        pipe.load_tree("plant", path)
+        arch = pipe.store.archive_values("plant")
+        return (pipe.store.attribute("plant").orderBy("attribute_id")
+                .collect(),
+                dict(arch.groupBy("attribute_id").count().collect()))
+
+    def append(attribute_id, minutes, value):
+        pipe.store.append_archive("plant", spark.createDataFrame(
+            [(attribute_id, T0 + timedelta(minutes=m), value)
+             for m in range(minutes)],
+            "attribute_id long, timestamp timestamp, value double"))
+
+    tree = copy.deepcopy(TREE)
+    boiler = tree[0]["children"][0]
+    fan_a, fan_b = boiler["children"]
+    # a renamed parent drops its derived attribute, and the renamed
+    # element's history with it; Fan B's keeps its id
+    fan_a["name"] = "FanZ"
+    attrs, counts = reload(tree)
+    assert [(a.attribute_id, a.name, a.formula) for a in attrs] == [
+        (1, "Temperature", None), (2, "Pressure", None),
+        (3, "Temperature", None)]
+    assert counts == {3: n_fan_b}
+    # two same-named attributes share one path: a reload maps that
+    # path's history from the lowest old id to the lowest new id, once
+    fan_b["attributes"].append({"name": "Temperature"})
+    attrs, counts = reload(tree)
+    assert [a.attribute_id for a in attrs] == [1, 2, 3, 4]
+    assert counts == {3: n_fan_b}
+    append(4, 5, 99.0)
+    fan_a["attributes"].append({"name": "Flow"})  # shifts Fan B's ids
+    attrs, counts = reload(tree)
+    assert [(a.attribute_id, a.element_id, a.name) for a in attrs][2:] == [
+        (3, 3, "Flow"), (4, 4, "Temperature"), (5, 4, "Temperature")]
+    assert counts == {4: n_fan_b}
+    # a vanished attribute's archive rows are purged
+    append(2, 3, 1.0)
+    fan_b["attributes"] = []
+    attrs, counts = reload(tree)
+    assert [a.attribute_id for a in attrs] == [1, 2, 3]
+    assert counts == {2: 3}
 
 
 def test_mapping_cache_counts(pipe, tmp_path):
@@ -187,3 +238,34 @@ def test_delete_cascades_retain_null_attribute_rows(pipe, spark):
         pipe.delete_attribute("plant", remaining[0])
         arch = pipe.store.archive_values("plant")
         assert arch.where(arch.attribute_id.isNull()).count() == 1
+
+
+def _jobs_run_by(spark, action) -> int:
+    """Spark jobs that ``action()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_catalog_work_job_budget(spark, tmp_path):
+    """Catalog-sized work runs on the driver: a fresh load_tree reads
+    the two old dims and writes the two new ones, build_mapping
+    collects each dim once, and overwrite_dim of a local frame runs at
+    most its one collect."""
+    p = Pipeline(spark, str(tmp_path / "wh"))
+    tree = write_tree(tmp_path)
+    assert _jobs_run_by(spark, lambda: p.load_tree("plant", tree)) <= 4
+    assert _jobs_run_by(spark, lambda: build_mapping(
+        p.store.element("plant"), p.store.attribute("plant"),
+        server="SRV")) <= 2
+    local = spark.createDataFrame([(0, 1, "Root", None)], ELEMENT_SCHEMA)
+    assert _jobs_run_by(spark, lambda: p.store.overwrite_dim(
+        "plant", "element", local)) <= 1
+    assert [tuple(r) for r in p.store.element("plant").collect()] == [
+        (0, 1, "Root", None)]

@@ -1,6 +1,7 @@
 """Hand-computed semantics for operators/behavior.py (DuckDB parity
 is pinned by test_suite_oracle q85–q90)."""
 
+import os
 from datetime import datetime
 
 import pytest
@@ -131,6 +132,22 @@ def test_xms_mb_never_exceeds_configured_max():
     assert _xms_mb("1m") == 1
 
 
+def test_default_driver_mem_sized_from_ram(monkeypatch):
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap is 40 % of RAM,
+    within [1 GiB, 48 GiB]; a set variable passes through untouched."""
+    from industrial_data_pipeline_spark.session import (
+        default_driver_mem, driver_mem)
+    gib = 1024 ** 3
+    assert default_driver_mem(16 * gib) == "6553m"
+    assert default_driver_mem(256 * gib) == "49152m"
+    assert default_driver_mem(gib) == "1024m"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert driver_mem() == "3g"
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
+    assert driver_mem() == default_driver_mem(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
+
+
 def test_set_similarity_ignores_null_items(spark):
     """A NULL item must not deflate set sizes: two identical sets
     that each also carry a NULL row are still Jaccard 1.0."""
@@ -190,37 +207,47 @@ def test_chi_square_excludes_null_categories(spark):
 
 def test_recursive_cte_closure_matches_iterative(spark):
     """Stretch (VERDICT r4 item 7): the WITH RECURSIVE variant of the
-    hierarchy closure must agree row-for-row with the iterative loop
-    (same omission contract for dangling parents). Skipped on Sparks
-    without SPARK-24497."""
+    hierarchy closure and the driver-side catalog walk
+    (``element_paths``) must agree with the iterative loop as
+    multisets: same omission contract for dangling parents and
+    cycles, one row per join match for a duplicated element id, and
+    ``concat_ws`` NULL skipping. Skipped on Sparks without
+    SPARK-24497."""
+    from collections import Counter
+
     import pytest as _pytest
 
     from industrial_data_pipeline_spark.operators.closure import (
-        hierarchy_paths, hierarchy_paths_recursive,
+        element_paths, hierarchy_paths, hierarchy_paths_recursive,
         supports_recursive_cte)
     if not supports_recursive_cte(spark):
         _pytest.skip("no WITH RECURSIVE on this Spark")
     rows = [(0, 1, "Root", None), (1, 2, "A", 1), (1, 3, "B", 1),
             (2, 4, "A1", 2), (3, 5, "A1x", 4),
-            (2, 9, "orphan", 77)]  # dangling parent: omitted by both
+            (2, 9, "orphan", 77),  # dangling parent: omitted by all
+            (1, 10, "C1", 11), (1, 11, "C2", 10),  # 2-cycle: omitted
+            (2, 3, "B2", 2),  # duplicate id 3: its children resolve twice
+            (2, 12, "Bc", 3), (3, 13, None, 3),  # NULL name under id 3
+            (4, 14, "N1", 13),
+            (0, 20, None, None), (1, 21, "R2c", 20)]  # NULL-named root
     elem = spark.createDataFrame(
         rows, "level int, element_id long, name string, parent_id long")
-    it = {(r.element_id, r.path)
-          for r in hierarchy_paths(elem).collect()}
-    rec = {(r.element_id, r.path)
-           for r in hierarchy_paths_recursive(elem).collect()}
-    assert it == rec
-    assert (5, "Root|A|A1|A1x") in rec and all(i != 9 for i, _ in rec)
-    # adversarial separators (the PI backslash form and a quote):
+    # adversarial separators too (the PI backslash form and a quote):
     # the sep is a BOUND parameter, so neither may corrupt or throw
-    for sep in ["\\", "it's"]:
-        it_s = {(r.element_id, r.path)
-                for r in hierarchy_paths(elem, sep=sep).collect()}
-        rec_s = {(r.element_id, r.path)
-                 for r in hierarchy_paths_recursive(
-                     elem, sep=sep).collect()}
-        assert it_s == rec_s
-        assert (5, sep.join(["Root", "A", "A1", "A1x"])) in rec_s
+    for sep in ["|", "\\", "it's"]:
+        it = Counter((r.element_id, r.path)
+                     for r in hierarchy_paths(elem, sep=sep).collect())
+        rec = Counter((r.element_id, r.path)
+                      for r in hierarchy_paths_recursive(
+                          elem, sep=sep).collect())
+        drv = Counter((r[1], r[4]) for r in element_paths(rows, sep=sep))
+        assert it == rec == drv
+        assert drv[(5, sep.join(["Root", "A", "A1", "A1x"]))] == 1
+        assert not {9, 10, 11} & {i for i, _ in drv}
+        assert drv[(12, sep.join(["Root", "B", "Bc"]))] == 1
+        assert drv[(12, sep.join(["Root", "A", "B2", "Bc"]))] == 1
+        assert drv[(14, sep.join(["Root", "A", "B2", "N1"]))] == 1
+        assert drv[(20, None)] == 1 and drv[(21, "R2c")] == 1
 
 
 def test_weighted_median_bucketed_equals_naive_window(spark):

@@ -1,9 +1,14 @@
 """Tree-cache loading (S4/D2) and leaf extraction (S5) per FIXTURES.md F4."""
 
+import json
+
+from industrial_data_pipeline_spark.catalog.schemas import (
+    ATTRIBUTE_SCHEMA,
+    ELEMENT_SCHEMA,
+)
 from industrial_data_pipeline_spark.sources.tree import (
     extract_leaf_webids,
     flatten_tree,
-    load_tree_cache,
 )
 
 from tests.fixtures import TREE, write_tree
@@ -35,7 +40,12 @@ def test_single_root_object_accepted():
 
 
 def test_load_tree_cache_schemas(spark, tmp_path):
-    elem, attr = load_tree_cache(spark, write_tree(tmp_path))
+    """A tree-cache file's flattened rows fit the catalog schemas
+    ``Pipeline.load_tree`` writes them under."""
+    with open(write_tree(tmp_path), encoding="utf-8") as f:
+        elements, attributes = flatten_tree(json.load(f))
+    elem = spark.createDataFrame(elements, ELEMENT_SCHEMA)
+    attr = spark.createDataFrame(attributes, ATTRIBUTE_SCHEMA)
     assert elem.count() == 6
     assert attr.count() == 3
     assert [f.name for f in elem.schema.fields] == [
